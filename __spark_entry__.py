@@ -92,13 +92,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ [EXT]).
 
-    Each callable releases the package's pinned caches (``_pin`` /
-    ``_bounded_broadcast`` registrations) before building its plan, so a
-    driver session that iterates many queries holds at most one query's
-    caches at a time instead of accumulating all of them until teardown.
-    Safe by construction: the driver executes each query before building
-    the next, and unpersist on an already-collected plan is a no-op
-    (a still-pending plan would just recompute).
+    Each callable calls ``release_caches()`` (a clear of the session's
+    cache: the operators' ``.cache()`` pins and ``bounded_broadcast``
+    persists) before building its plan, so a driver session that iterates
+    many queries holds at most one query's caches at a time instead of
+    accumulating all of them until teardown. Safe by construction: the
+    driver executes each query before building the next, and a
+    still-pending plan whose cache was cleared would just recompute.
     """
     from tiny_mapreduce_rpc_server_spark import release_caches
 

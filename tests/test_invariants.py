@@ -6,10 +6,12 @@ exact computation, and value-level cross-checks — not just ``count() >= 0``.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tiny_mapreduce_rpc_server_spark.functions import dot
+from tiny_mapreduce_rpc_server_spark.functions.portable import C1, C2, M1, M2
 from tiny_mapreduce_rpc_server_spark.operators.dedup import (
     JACCARD_VERIFY,
     _doc_shingles,
@@ -192,7 +194,7 @@ def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
     (count DESC, lhs, rhs) tie-breaks, same left-to-right replace."""
     import tiny_mapreduce_rpc_server_spark.operators.chunking as C
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
 
     def merges(df):
         return [tuple(r) for r in df.collect()]
@@ -205,6 +207,66 @@ def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
     assert len(new_m) == C.BPE_MERGE_ROUNDS
 
 
+def _simhash_ones_col(th, bits: int) -> F.Column:
+    """Per-bit ONE-counts of a token-hash array in a SINGLE pass: a
+    ``bits``-wide counter array folded once over ``th`` (``acc[j] +=
+    bit_j(x)``). The r11 optimization-round rewrite of the per-bit fold
+    cascade: the old form ran one ``F.aggregate`` PER BIT — 63 passes
+    over every document's token-hash array — where one pass carrying an
+    array accumulator does the same counting (interleaved A/B at sf0.1:
+    2.39 s -> 1.44 s median for the 63-bit signature build, identical
+    output). ``th`` must be a column reference (it is referenced by the
+    fold and by ``size``; CollapseProject keeps a twice-referenced
+    non-cheap expression in its own projection)."""
+    return F.aggregate(
+        th,
+        F.array_repeat(F.lit(0).cast("long"), bits),
+        lambda acc, x: F.zip_with(
+            acc,
+            F.array(*[x.bitwiseAND(F.lit(1 << j)) for j in range(bits)]),
+            lambda a, b: a + F.when(b != F.lit(0), 1).otherwise(0),
+        ),
+    )
+
+
+def _simhash_from_ones(ones, n, bits: int) -> F.Column:
+    """Fingerprint from per-bit one-counts: bit j set iff the (+-1) vote
+    sum is positive — ``sum_votes_j = 2*ones[j] - n > 0  <=>  2*ones[j] >
+    n``, exact integer math, so the result is bit-identical to the
+    per-bit fold form (and to the SQL oracle's ``list_sum`` votes).
+    ``ones`` must be a column reference: it is read ``bits`` times, which
+    is exactly what keeps CollapseProject from inlining (and recomputing)
+    the fold. ``bits`` is capped at 63 so the fingerprint stays in the
+    non-negative long range (the sign bit would break shift/compare
+    symmetry between Spark and the SQL oracle)."""
+    assert 0 < bits <= 63, bits
+    out = F.lit(0).cast("long")
+    for j in range(bits):
+        out = out + F.when(
+            2 * F.element_at(ones, j + 1) > n, F.lit(1 << j)
+        ).otherwise(F.lit(0))
+    return out
+
+
+def _simhash_fold(hashed: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, simhash) from the token-hash table via the one-pass JVM
+    fold (token-hash array in its own projection, the one-count array in
+    a second — the CollapseProject argument of _doc_shingles — and the
+    threshold/assemble step on top). This was ``_doc_simhash``'s build
+    through r11; it is kept as the exactness REFERENCE for the Arrow
+    kernel that replaced it (r12 opt: the two must stay bit-identical,
+    pinned by tests/test_invariants.py::test_simhash_kernel_matches_fold)."""
+    staged = hashed.select(
+        "doc_id",
+        F.size("th").cast("long").alias("n_th"),
+        _simhash_ones_col(F.col("th"), bits).alias("ones"),
+    )
+    return staged.select(
+        "doc_id",
+        _simhash_from_ones(F.col("ones"), F.col("n_th"), bits).alias("simhash"),
+    )
+
+
 def test_simhash_kernel_matches_fold(spark):
     """r12: the vectorized Arrow vote-count kernel must be bit-identical
     to the retained JVM fold — on the real corpus at BOTH bit widths and
@@ -212,7 +274,7 @@ def test_simhash_kernel_matches_fold(spark):
     negative hash values exercising arithmetic-shift bit extraction)."""
     import tiny_mapreduce_rpc_server_spark.operators.dedup as D
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     for bits in (D.SIMHASH_BITS, D.SIMHASH_WIDE_BITS):
         got = {
             (r.doc_id, r.simhash)
@@ -225,7 +287,7 @@ def test_simhash_kernel_matches_fold(spark):
         hashed = docs.select("doc_id", th.alias("th"))
         ref = {
             (r.doc_id, r.simhash)
-            for r in D._simhash_fold(hashed, bits).collect()
+            for r in _simhash_fold(hashed, bits).collect()
         }
         assert got == ref and len(got) > 0
 
@@ -235,7 +297,7 @@ def test_simhash_kernel_matches_fold(spark):
     )
     for bits in (31, 63):
         got = sorted(D._simhash_kernel(edge, bits).collect())
-        ref = sorted(D._simhash_fold(edge, bits).collect())
+        ref = sorted(_simhash_fold(edge, bits).collect())
         assert got == ref
         assert got[0]["simhash"] == 0 and got[1]["simhash"] == 0
 
@@ -443,7 +505,7 @@ def test_streaming_outer_join_min_watermark_at_sparse_sf(spark):
         q_streaming_outer_join,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     compare(q_streaming_outer_join(spark, sf), ORACLE_STREAMING_OUTER_JOIN, sf)
 
 
@@ -482,7 +544,7 @@ def test_streaming_full_outer_join_min_watermark_at_sparse_sf(spark):
         q_streaming_full_outer_join,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     compare(
         q_streaming_full_outer_join(spark, sf),
         ORACLE_STREAMING_FULL_OUTER_JOIN,
@@ -527,11 +589,19 @@ def test_cms_estimates_never_undercount(spark):
         assert r["overestimate"] == r["est_cnt"] - r["true_cnt"]
 
 
+def py_h1(s: str) -> int:
+    """Python twin of h1() for tests/driver-side checks. F.ascii takes
+    the code of the first character, so ord() matches it for the ASCII
+    inputs these hashes are applied to."""
+    return (
+        sum(ord(c) * (((i + 1) * C1 + C2) % M1) for i, c in enumerate(s)) % M2
+    )
+
+
 def test_dedup_incremental_sides_and_threshold(spark):
     """Every reported pair crosses the batch boundary in the right
     direction (new doc in the incoming bucket, old doc in the existing
     bucket), meets the verify threshold, and doc_new appears once."""
-    from tiny_mapreduce_rpc_server_spark.functions import portable as P
     from tiny_mapreduce_rpc_server_spark.operators.dedup import (
         INCR_INCOMING_FROM,
         q_dedup_incremental,
@@ -540,7 +610,7 @@ def test_dedup_incremental_sides_and_threshold(spark):
     rows = q_dedup_incremental(spark, SF_ORACLE).collect()
     assert rows, "sf0.01 has planted near-dups; incremental must find some"
     seen = set()
-    bucket = lambda i: P.py_h1(str(i)) % 100  # noqa: E731
+    bucket = lambda i: py_h1(str(i)) % 100  # noqa: E731
     for r in rows:
         assert r["doc_new"] not in seen
         seen.add(r["doc_new"])
@@ -1194,7 +1264,7 @@ def test_lpa_converged_fixed_point_contract(spark):
     assert settled[1] == settled[2] == 1
     assert settled[10] == settled[11] == settled[12] == 10
 
-    out = q_graph_community_lpa_converged(spark, "/root/testdata/sf0.001").collect()
+    out = q_graph_community_lpa_converged(spark, SF_SMOKE).collect()
     n_nodes = sum(r.n_members for r in out)
     assert n_nodes > 0
     for r in out:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tiny_mapreduce_rpc_server_spark.registry import all_queries
 
 
@@ -859,7 +859,7 @@ def test_global_topk_is_take_ordered(spark, name):
 def test_minhash_verify_join_broadcasts_bounded_candidate_set(spark):
     """The exact re-score join must broadcast the candidate pair set so
     shingle arrays never ride an exchange. The hint is count-gated
-    (dedup._bounded_broadcast — the round-4 scale-hazard fix), so this
+    (session.bounded_broadcast — the round-4 scale-hazard fix), so this
     pins BOTH that the bound admits the broadcast at test SF AND that no
     Exchange in the plan carries the shingles column."""
     import re
@@ -875,14 +875,31 @@ def test_bounded_broadcast_degrades_above_bound(spark, monkeypatch):
     """Above the pair bound the broadcast hint must be DROPPED — the
     re-score degrades to a shuffled join instead of OOMing the driver
     on a duplicate-heavy corpus."""
-    from tiny_mapreduce_rpc_server_spark.operators import dedup
+    from tiny_mapreduce_rpc_server_spark import session
 
     pairs = spark.range(100).selectExpr("id as doc_a", "id + 1 as doc_b")
-    hinted = dedup._bounded_broadcast(pairs)
+    hinted = session.bounded_broadcast(pairs)
     assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
-    monkeypatch.setattr(dedup, "BROADCAST_PAIR_BOUND", 10)
-    plain = dedup._bounded_broadcast(pairs)
+    monkeypatch.setattr(session, "BROADCAST_PAIR_BOUND", 10)
+    plain = session.bounded_broadcast(pairs)
     assert "hint" not in plain._jdf.queryExecution().logical().toString().lower()
+
+
+def test_release_caches_clears_session_cache(spark):
+    """release_caches() alone (no clearCache()) empties the session's
+    CacheManager after a query that pins (.cache()) and gates
+    (bounded_broadcast), and a rebuilt query returns the same rows."""
+    from tiny_mapreduce_rpc_server_spark import release_caches
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    fn = all_queries()["dedup_minhash_lsh"].fn
+    release_caches()
+    before = sorted(fn(spark, SF_SMOKE).collect())
+    assert not cache_manager.isEmpty()
+    release_caches()
+    assert cache_manager.isEmpty()
+    assert sorted(fn(spark, SF_SMOKE).collect()) == before
+    release_caches()
 
 
 @pytest.mark.parametrize(
@@ -1178,7 +1195,6 @@ def test_plan_fingerprints_registry_wide(spark):
             from tiny_mapreduce_rpc_server_spark import release_caches
 
             release_caches()
-            spark.catalog.clearCache()
             retried[name] = dp.operator_tree(
                 spark, all_queries()[name].fn(spark, FP_SF_DIR)
             )

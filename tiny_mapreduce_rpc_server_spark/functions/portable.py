@@ -72,15 +72,6 @@ def h1(col: Column) -> Column:
     return char_hash(col) % M2
 
 
-def py_h1(s: str) -> int:
-    """Python twin of h1() for tests/driver-side checks. F.ascii takes
-    the code of the first character, so ord() matches it for the ASCII
-    inputs these hashes are applied to."""
-    return (
-        sum(ord(c) * (((i + 1) * C1 + C2) % M1) for i, c in enumerate(s)) % M2
-    )
-
-
 def h2(col: Column) -> Column:
     return (h1(col) * C1 + 911) % M31
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.functions import psl
+from tiny_mapreduce_rpc_server_spark.session import bounded_broadcast
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -45,69 +46,6 @@ COSINE_DUP = 0.4
 # candidate-generation hygiene: ignore shingles shared by more than this
 # many docs (stop-shingle cap — prevents hot-key shuffle skew at scale)
 MAX_SHINGLE_DF = 50
-
-# broadcast a candidate-pair set only below this many pairs: 2M rows of
-# (long, long) is ~32 MB, the session's autoBroadcastJoinThreshold
-BROADCAST_PAIR_BOUND = 2_000_000
-
-
-# Every DataFrame this module persists/caches, so a long-lived session
-# can release them without nuking unrelated caches. clearCache() (which
-# bench.py / the scale tools / test teardowns already call between runs)
-# also drops the blocks; this list additionally drops the DRIVER-side
-# references so the tracking itself can't accumulate.
-_TRACKED_PERSISTS: list[DataFrame] = []
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """cache() a DataFrame and register it for ``release_caches``."""
-    df = df.cache()
-    _TRACKED_PERSISTS.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every table this module pinned (bounded-broadcast
-    candidate sets, shingle/signature tables). Call between queries in a
-    long-lived session; ``spark.catalog.clearCache()`` is the blunter
-    session-wide equivalent."""
-    while _TRACKED_PERSISTS:
-        try:
-            _TRACKED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-
-
-def _bounded_broadcast(cand: DataFrame) -> DataFrame:
-    """Broadcast a small derived table (candidate pairs, duplicate-id
-    lists) only when it is PROVABLY small.
-
-    The consumers want these tables broadcast so the large corpus /
-    shingle / embedding side is never shuffled — but an *unconditional*
-    hint is a scale hazard: on a duplicate-heavy 100 TB crawl LSH bands
-    can emit billions of candidate pairs and the duplicate list is a
-    large fraction of the corpus, and a forced broadcast then kills the
-    driver instead of degrading. So the table (a couple of longs per
-    row — cheap to hold) is persisted, counted, and broadcast only
-    under BROADCAST_PAIR_BOUND; above the bound the hint is dropped and
-    the join degrades to a shuffle — slower, but alive. The count
-    reuses the persisted rows, so the upstream computation still runs
-    exactly once.
-
-    CONTRACT NOTE (also in QuerySpec's docstring): building a query that
-    goes through this gate runs a real Spark job (the count) at
-    DataFrame-construction time — construction is NOT plan-only for the
-    dedup/graph/sampling queries that need the gate. The persisted
-    blocks live until ``release_caches()`` / ``clearCache()`` / session
-    teardown.
-    """
-    from pyspark import StorageLevel
-
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS.append(cand)
-    n = cand.count()
-    return F.broadcast(cand) if n <= BROADCAST_PAIR_BOUND else cand
-
 
 # ---------------------------------------------------------------------------
 # building blocks (Spark side)
@@ -251,7 +189,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    docs = _pin(docs)
+    docs = docs.cache()
     strided = _substr_windows(docs, SUBSTR_STRIDE)
     dense = _substr_windows(docs, 1)
     # a strided window is duplicated if ANY OTHER doc's dense set
@@ -420,11 +358,9 @@ def _shingle_intersections(spark: SparkSession, sf_dir: str):
     (set sizes are preserved — transform keeps array length). Same
     accepted-collision contract as before (the join key was already the
     hash; the oracle intersects strings)."""
-    ds = _pin(
-        _doc_shingles(spark, sf_dir).select(
-            "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs")
-        )
-    )
+    ds = _doc_shingles(spark, sf_dir).select(
+        "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs")
+    ).cache()
     sizes = ds.select("doc_id", F.size("hs").alias("n"))
     ex = ds.select("doc_id", F.explode("hs").alias("s"))
     rare = (
@@ -497,7 +433,7 @@ def _minhash_sig_col(th) -> F.Column:
     an N_HASHES-wide accumulator updated per element (``acc[i] =
     least(acc[i], perm_i(x))``) instead of one ``transform`` +
     ``array_min`` pass PER PERMUTATION — the same single-pass rewrite as
-    ``_simhash_ones_col`` (r11 opt #1), killing 16 array traversals and
+    the simhash one-count fold (r11 opt #1), killing 16 array traversals and
     16 intermediate array allocations per row. Init is M2 (every perm
     value is ``% M2`` < M2, so it acts as +inf); a doc with zero shingles
     folds to all-M2 where ``array_min(transform(empty))`` was NULL — its
@@ -558,7 +494,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_intersect. The band shuffle carries only (bucket, doc_id) —
     never the shingle arrays — and signature computation is
     embarrassingly parallel; this is the shape that survives 100 TB."""
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     ex = _band_keys(ds)
     a, b = ex.alias("a"), ex.alias("b")
     cand = (
@@ -575,7 +511,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     da = ds.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha"))
     db = ds.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb"))
-    joined = _bounded_broadcast(cand).join(da, "doc_a").join(db, "doc_b")
+    joined = bounded_broadcast(cand).join(da, "doc_a").join(db, "doc_b")
     inter = F.size(F.array_intersect("sha", "shb"))
     jac = inter / (F.size("sha") + F.size("shb") - inter)
     return joined.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
@@ -650,7 +586,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per incoming doc that collides, with its best
     existing match (highest jaccard, ties to the lowest existing id).
     """
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
     bk = _band_keys(ds)
     inc_keys = bk.filter(incoming_pred)
@@ -660,7 +596,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # an actual count anyway — this demo's batch is a corpus
         # fraction, and a mis-sized batch should degrade to a shuffled
         # probe of the index, not kill the driver
-        _bounded_broadcast(inc_keys.alias("i"))
+        bounded_broadcast(inc_keys.alias("i"))
         .join(ex_keys.alias("e"), F.col("i.bk") == F.col("e.bk"))
         .select(
             F.col("i.doc_id").alias("doc_new"),
@@ -673,7 +609,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("shn", "sho"))
     jac = inter / (F.size("shn") + F.size("sho") - inter)
     verified = (
-        _bounded_broadcast(cand)
+        bounded_broadcast(cand)
         .join(dn, "doc_new")
         .join(do, "doc_old")
         .select("doc_new", "doc_old", jac.alias("jaccard"))
@@ -749,7 +685,7 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
 
     sf = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tempfile.gettempdir(), f"tmrs_lsh_index_{sf}")
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
     existing = ds.filter(~incoming_pred)
     # ---- build: the batch indexing job (writes the lake state) ----
@@ -761,7 +697,7 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     inc = ds.filter(incoming_pred)
     inc_keys = _band_keys(inc)
     cand = (
-        _bounded_broadcast(inc_keys.alias("i"))
+        bounded_broadcast(inc_keys.alias("i"))
         .join(ex_keys.alias("e"), F.col("i.bk") == F.col("e.bk"))
         .select(
             F.col("i.doc_id").alias("doc_new"),
@@ -776,7 +712,7 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     inter = F.size(F.array_intersect("shn", "sho"))
     jac = inter / (F.size("shn") + F.size("sho") - inter)
     verified = (
-        _bounded_broadcast(cand)
+        bounded_broadcast(cand)
         .join(dn, "doc_new")
         .join(do, "doc_old")
         .select("doc_new", "doc_old", jac.alias("jaccard"))
@@ -793,66 +729,6 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 # SimHash near-dup
 # ---------------------------------------------------------------------------
-
-
-def _simhash_ones_col(th, bits: int) -> F.Column:
-    """Per-bit ONE-counts of a token-hash array in a SINGLE pass: a
-    ``bits``-wide counter array folded once over ``th`` (``acc[j] +=
-    bit_j(x)``). The r11 optimization-round rewrite of the per-bit fold
-    cascade: the old form ran one ``F.aggregate`` PER BIT — 63 passes
-    over every document's token-hash array — where one pass carrying an
-    array accumulator does the same counting (interleaved A/B at sf0.1:
-    2.39 s -> 1.44 s median for the 63-bit signature build, identical
-    output). ``th`` must be a column reference (it is referenced by the
-    fold and by ``size``; CollapseProject keeps a twice-referenced
-    non-cheap expression in its own projection)."""
-    return F.aggregate(
-        th,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.array(*[x.bitwiseAND(F.lit(1 << j)) for j in range(bits)]),
-            lambda a, b: a + F.when(b != F.lit(0), 1).otherwise(0),
-        ),
-    )
-
-
-def _simhash_from_ones(ones, n, bits: int) -> F.Column:
-    """Fingerprint from per-bit one-counts: bit j set iff the (+-1) vote
-    sum is positive — ``sum_votes_j = 2*ones[j] - n > 0  <=>  2*ones[j] >
-    n``, exact integer math, so the result is bit-identical to the
-    per-bit fold form (and to the SQL oracle's ``list_sum`` votes).
-    ``ones`` must be a column reference: it is read ``bits`` times, which
-    is exactly what keeps CollapseProject from inlining (and recomputing)
-    the fold. ``bits`` is capped at 63 so the fingerprint stays in the
-    non-negative long range (the sign bit would break shift/compare
-    symmetry between Spark and the SQL oracle)."""
-    assert 0 < bits <= 63, bits
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(
-            2 * F.element_at(ones, j + 1) > n, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    return out
-
-
-def _simhash_fold(hashed: DataFrame, bits: int) -> DataFrame:
-    """(doc_id, simhash) from the token-hash table via the one-pass JVM
-    fold (token-hash array in its own projection, the one-count array in
-    a second — the CollapseProject argument of _doc_shingles — and the
-    threshold/assemble step on top). This was ``_doc_simhash``'s build
-    through r11; it is kept as the exactness REFERENCE for the Arrow
-    kernel that replaced it (r12 opt: the two must stay bit-identical,
-    pinned by tests/test_invariants.py::test_simhash_kernel_matches_fold)."""
-    staged = hashed.select(
-        "doc_id",
-        F.size("th").cast("long").alias("n_th"),
-        _simhash_ones_col(F.col("th"), bits).alias("ones"),
-    )
-    return staged.select(
-        "doc_id",
-        _simhash_from_ones(F.col("ones"), F.col("n_th"), bits).alias("simhash"),
-    )
 
 
 def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
@@ -913,8 +789,8 @@ def _doc_simhash(
 ) -> DataFrame:
     """(doc_id, simhash): tokenize + portable h2 in native codegen'd
     expressions, then the per-bit vote count in the vectorized Arrow
-    kernel (see ``_simhash_kernel``; ``_simhash_fold`` is the retained
-    bit-identical reference)."""
+    kernel (see ``_simhash_kernel``; ``_simhash_fold`` in
+    tests/test_invariants.py is the retained bit-identical reference)."""
     docs = load_table(spark, sf_dir, "documents")
     th = F.transform(F.array_distinct(_toks(F.col("text"))), lambda t: P.h2(t))
     hashed = spread(docs).select("doc_id", th.alias("th"))
@@ -1068,7 +944,7 @@ def _simhash_pairs(sh: DataFrame, block_spec) -> DataFrame:
     """Candidate generation + hamming verify at distinct-signature
     granularity (see ``q_dedup_simhash``), expanded back to doc pairs,
     for any (offset, width) block partition of the fingerprint."""
-    sh = _pin(sh)
+    sh = sh.cache()
     sig_pairs = _simhash_sig_pairs(sh, block_spec)
     # The signature-pair set is tiny (distinct signatures only), so AQE
     # coalesces its exchange to ~one partition — but the doc-expansion
@@ -1570,7 +1446,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 bytes/shingle, and both branches explode longs. Probe keys are
     # the same 8-byte hashes as before (collision argument as in
     # q_dedup_ngram_jaccard).
-    ds = _pin(
+    ds = (
         _doc_shingles(spark, sf_dir)
         .join(docs, "doc_id")
         .select(
@@ -1578,6 +1454,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs"),
         )
+        .cache()
     )
     bench = (
         ds.filter(F.col("source") == "src0")

@@ -36,19 +36,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.operators.dedup import (
-    BROADCAST_PAIR_BOUND,
     HAMMING_MAX,
     ORACLE_DEDUP_NGRAM_JACCARD,
     SIMHASH_WIDE_BITS,
     _SIMHASH_WIDE_BLOCKS,
     _T,
-    _bounded_broadcast,
     _doc_simhash,
-    _pin,
     _sig_pairs_of_distinct,
     _sql_simhash,
     q_dedup_ngram_jaccard,
 )
+from tiny_mapreduce_rpc_server_spark.session import BROADCAST_PAIR_BOUND, bounded_broadcast
 from tiny_mapreduce_rpc_server_spark.sources import load_table
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -56,12 +54,12 @@ _MAX_ROUNDS = 20
 
 # Single-task union-find gate: below this many edges the whole pair list
 # provably fits in ONE task's memory (2M (long,long) rows ~ 32 MB — the
-# same constant class as dedup.BROADCAST_PAIR_BOUND) and the iterative
+# same constant class as session.BROADCAST_PAIR_BOUND) and the iterative
 # loop's per-round scheduler cost dominates the actual work, so CC runs
 # as one mapInPandas over coalesce(1). Above the gate the distributed
 # O(log diameter) loop below is unchanged. The edge count is read off
 # the already-materialized localCheckpoint, so the gate costs one
-# metadata-cheap job, exactly like _bounded_broadcast's count.
+# metadata-cheap job, exactly like bounded_broadcast's count.
 CC_LOCAL_MAX_EDGES = 2_000_000
 
 
@@ -319,7 +317,7 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: the duplicate list is cluster members minus representatives,
     broadcast against one corpus scan when provably small (count-gated
-    via dedup._bounded_broadcast — on a duplicate-heavy crawl the dup
+    via session.bounded_broadcast — on a duplicate-heavy crawl the dup
     list is a large FRACTION of the corpus, and an unconditional hint
     would OOM the driver; the count is a cheap scan of the
     localCheckpoint-materialized component table). Above the bound the
@@ -335,7 +333,7 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    marked = docs.join(_bounded_broadcast(dups), "doc_id", "left")
+    marked = docs.join(bounded_broadcast(dups), "doc_id", "left")
     return (
         marked.groupBy("source")
         .agg(
@@ -407,15 +405,14 @@ def q_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator)."""
     from tiny_mapreduce_rpc_server_spark.operators.sampling import _split_col
 
-    pairs = _pin(
-        q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    )
+    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").cache()
     comp = propagate_components(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    asg = _pin(
-        docs.join(_bounded_broadcast(comp), "doc_id", "left")
+    asg = (
+        docs.join(bounded_broadcast(comp), "doc_id", "left")
         .select("doc_id", F.coalesce("component", "doc_id").alias("rep"))
         .select("doc_id", "rep", _split_col(F.col("rep")).alias("split"))
+        .cache()
     )
     a = asg.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     b = asg.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
@@ -503,10 +500,11 @@ def q_dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys instead of through a SECOND full exchange (`distinct`). One
     exchange and an N-row cache removed; both consumers (edge
     generation, rollup) read the same K-row pin."""
-    sig_docs = _pin(
+    sig_docs = (
         _doc_simhash(spark, sf_dir, SIMHASH_WIDE_BITS)
         .groupBy("simhash")
         .agg(F.count("*").alias("n_docs"))
+        .cache()
     )
     sig_edges = (
         _sig_pairs_of_distinct(sig_docs.select("simhash"), _SIMHASH_WIDE_BLOCKS)
@@ -703,14 +701,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
     )
-    e = _pin(e)
+    e = e.cache()
     # adjacency-intersection instead of the naive wedge join: the wedge
     # plan materializes sum_b in(b)*out(b) rows (~70M here) through a
     # sort-merge join; intersecting per-edge neighbor lists touches each
     # edge once with O(deg) work and needs no wedge shuffle at all.
     # adj(u) holds only HIGHER neighbors, so triangle {a<b<c} is found
     # exactly once, at edge (a,b), as c in adj(a) ∩ adj(b).
-    adj = _pin(e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb")))
+    adj = e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb")).cache()
     adj_u = adj.withColumnRenamed("u", "x").withColumnRenamed("nb", "nb_u")
     adj_v = adj.withColumnRenamed("u", "y").withColumnRenamed("nb", "nb_v")
     empty = F.array().cast("array<bigint>")

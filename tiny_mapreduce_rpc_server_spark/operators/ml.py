@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import davg
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
+from tiny_mapreduce_rpc_server_spark.session import bounded_broadcast
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -572,7 +573,7 @@ def _cluster_rollup(margin: float, threshold: float):
     algorithm", §2.3/§2.4): the previous two-stage form emitted candidate
     PAIRS from this kernel and re-scored them with the ordered-fold
     cosine via TWO equi-joins against the full N-row assignment — so the
-    assignment had to be cached (`_pin`) and the embedding payload
+    assignment had to be cached (`.cache()`) and the embedding payload
     crossed two more exchanges just to recompute cosines the kernel had
     already (approximately) computed. The group handed to applyInPandas
     IS the whole cluster, so the exact decision can be made in place and
@@ -1262,7 +1263,6 @@ def q_dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sort_values("cluster")
     )
     from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
 
     # zero-norm vectors have no defined cosine: the oracle's division by
     # zero yields NULL and the NULL comparison DROPS the pair, while ANSI
@@ -1280,7 +1280,7 @@ def q_dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch is small by contract, but gate the broadcast on a real count
     # so a mis-sized batch degrades to a shuffled cluster-key join
     scored = (
-        _bounded_broadcast(in_a)
+        bounded_broadcast(in_a)
         .join(ex_a, "cluster")
         .select(
             "vec_new",
@@ -1406,7 +1406,6 @@ def q_dedup_semantic_incremental_persisted(
     cents = spark.read.parquet(base + "/centroids").toPandas().sort_values("cluster")
     members = spark.read.parquet(base + "/members")
     from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
 
     nonzero = dot(F.col("v"), F.col("v")) > 0
     ex_a = members.filter(dot(F.col("vo"), F.col("vo")) > 0)
@@ -1414,7 +1413,7 @@ def q_dedup_semantic_incremental_persisted(
         F.col("vec_id").alias("vec_new"), "cluster", F.col("v").alias("vn")
     )
     scored = (
-        _bounded_broadcast(in_a)
+        bounded_broadcast(in_a)
         .join(ex_a, "cluster")
         .select(
             "vec_new",

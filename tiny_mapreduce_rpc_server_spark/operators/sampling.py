@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
-from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
+from tiny_mapreduce_rpc_server_spark.session import bounded_broadcast
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -707,7 +707,7 @@ def q_pipeline_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     its builder, so the four stage branches read it instead of re-running
     clustering; each stage is a one-row aggregate over a progressively
     filtered scan, unioned at the end. The duplicate list broadcasts
-    only when provably small (count-gated, dedup._bounded_broadcast —
+    only when provably small (count-gated, session.bounded_broadcast —
     it is a large fraction of a duplicate-heavy corpus, not a constant);
     the sha256 dedup shuffles 32-byte digests."""
     from pyspark.sql import Window
@@ -719,7 +719,7 @@ def q_pipeline_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
-    s2 = docs.join(_bounded_broadcast(dups), "doc_id", "left_anti")
+    s2 = docs.join(bounded_broadcast(dups), "doc_id", "left_anti")
     w = Window.partitionBy(F.sha2(F.col("text").cast("binary"), 256)).orderBy(
         "doc_id"
     )

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
+from tiny_mapreduce_rpc_server_spark.session import bounded_broadcast
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -470,8 +471,8 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window's. df now partial-aggregates map-side (groupBy(w): the
     shuffle carries one pre-combined row per term per map partition,
     hot terms included) and joins back BROADCAST when the vocabulary
-    passes the count gate (``_bounded_broadcast``) — zero pairs-by-term
-    shuffle at all. Above the gate it degrades to a shuffled join,
+    passes the count gate (``session.bounded_broadcast``) — zero
+    pairs-by-term shuffle at all. Above the gate it degrades to a shuffled join,
     where AQE's skew-join split handles the hot probe partitions the
     window form could not. The pinned pairs subtree feeds both the df
     aggregate and the probe side, so tokenization runs once.
@@ -480,11 +481,6 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the true idf, and +,*,/ are correctly-rounded IEEE ops => bit-exact
     across engines; see q_bm25_search)."""
     from pyspark.sql import Window
-
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import (
-        _bounded_broadcast,
-        _pin,
-    )
 
     raw = load_table(spark, sf_dir, "documents")
     # metadata-only on the bare scan (before spread's repartition)
@@ -516,13 +512,13 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tf"),
         ),
     )
-    pairs = _pin(
-        t.select("doc_id", F.explode(runs).alias("r")).select(
-            "doc_id", F.col("r.w").alias("w"), F.col("r.tf").alias("tf")
-        )
+    pairs = (
+        t.select("doc_id", F.explode(runs).alias("r"))
+        .select("doc_id", F.col("r.w").alias("w"), F.col("r.tf").alias("tf"))
+        .cache()
     )
     dfreq = pairs.groupBy("w").agg(F.count("*").alias("df"))
-    scored = pairs.join(_bounded_broadcast(dfreq), "w")
+    scored = pairs.join(bounded_broadcast(dfreq), "w")
     score = (
         F.col("tf").cast("double")
         * F.lit(float(n_docs))
@@ -1297,9 +1293,7 @@ def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + rewrite) instead of three times; pinning `sized` instead would
     # cache corpus-sized token arrays, a 100 TB hazard. Released via
     # release_caches().
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _pin
-
-    seg = _pin(seg)
+    seg = seg.cache()
     # (2) boilerplate keys: appears in >= threshold distinct docs of a source
     boiler = (
         seg.groupBy("source", "seg_key")
@@ -1459,7 +1453,6 @@ def q_text_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT]).
     """
     from tiny_mapreduce_rpc_server_spark.functions import davg
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _pin
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", P.tokens(F.lower(F.col("text"))).alias("t"))
@@ -1482,7 +1475,7 @@ def q_text_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    pinned = _pin(scored)
+    pinned = scored.cache()
     # step 2: frozen literal boundaries (balance only — never rank)
     probs = [i / _LM_RANGE_PARTS for i in range(1, _LM_RANGE_PARTS)]
     bnds = sorted(set(pinned.stat.approxQuantile("score", probs, 0.001)))

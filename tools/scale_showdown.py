@@ -151,7 +151,6 @@ def main() -> int:
         eng = None
         for rep in range(3):
             release_caches()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             if sink:
                 path = f"/tmp/showdown_eng_{name}"
